@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. Queries run in name order after a small warmup so
@@ -20,29 +20,51 @@ import org.apache.spark.sql.SparkSession
   * doesn't is a regression to bisect.
   */
 object Bench {
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
+  private[graft] type Query = (SparkSession, String) => DataFrame
 
   /** One full execution via the noop sink (never count — Catalyst
-    * eliminates count-invariant operators), returning seconds.
+    * eliminates count-invariant operators): seconds, or the failure —
+    * the time to an exception is not a query time.
     */
-  private def timeOne(spark: SparkSession, sfDir: String,
-      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+  private def timeOne(spark: SparkSession, sfDir: String, fn: Query): Either[Throwable, Double] = {
     val t0 = System.nanoTime()
-    try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    (System.nanoTime() - t0) / 1e9
+    try {
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      Right((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable => Left(e) }
+  }
+
+  /** Two timed passes: each query's minimum (`times`, name order) and
+    * max/min ratio (`spread`, the in-run noise floor). A query that
+    * throws in either pass is listed in `failed` and timed nowhere.
+    */
+  private[graft] final case class Timings(times: Seq[(String, Double)], spread: Map[String, Double],
+      failed: Seq[String])
+
+  private[graft] def timePasses(spark: SparkSession, sfDir: String, picked: Seq[(String, Query)]): Timings = {
+    def pass() = picked.map { case (n, fn) => n -> timeOne(spark, sfDir, fn) }
+    val p1 = pass().toMap
+    val both = pass().map { case (n, t) => n -> (for (a <- p1(n); b <- t) yield (a, b)) }
+    val failed = both.collect { case (n, Left(e)) => println(s"[bench] $n failed: $e"); n }
+    val ok = both.collect { case (n, Right((a, b))) => (n, a, b) }
+    Timings(
+      ok.map { case (n, a, b) => n -> math.min(a, b) },
+      ok.map { case (n, a, b) => n -> math.max(a, b) / math.max(1e-9, math.min(a, b)) }.toMap,
+      failed)
+  }
+
+  /** Untimed warm-up shared by the main run and the isolated child:
+    * touch every table, exercise the shuffle/aggregate machinery once.
+    */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    Tables.All.foreach { t =>
+      try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => }
+    }
+    try {
+      import org.apache.spark.sql.functions._
+      spark.range(1000000).select((col("id") % 97).as("k"), col("id"))
+        .groupBy("k").count().count()
+    } catch { case _: Throwable => }
   }
 
   /** Child-JVM entry (`--isolated name,name,...`): a clean-heap re-time of
@@ -54,25 +76,16 @@ object Bench {
     * `[isolated-json]` line for the parent to parse. NEVER touches
     * bench_full.json.
     */
-  private def isolatedChild(sfDir: String, cpus: String, names: Seq[String]): Unit = {
-    val spark = buildSession(cpus)
+  private def isolatedChild(sfDir: String, cpus: Int, names: Seq[String]): Unit = {
+    val spark = Sessions.local(cpus)
     val picked = SparkEntry.queries.toSeq.filter(q => names.contains(q._1)).sortBy(_._1)
-    Tables.All.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => }
-    }
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(1000000).select((col("id") % 97).as("k"), col("id"))
-        .groupBy("k").count().count()
-    } catch { case _: Throwable => }
+    warmUp(spark, sfDir)
     // discarded warmup EXECUTION per query: pays codegen compile + JIT +
     // fixture caches outside the timed window, same as the parent run
     picked.foreach { case (_, fn) => timeOne(spark, sfDir, fn) }
-    val p1 = picked.map { case (n, fn) => n -> timeOne(spark, sfDir, fn) }.toMap
-    val res = picked.map { case (n, fn) => n -> math.min(timeOne(spark, sfDir, fn), p1(n)) }
-    println(res.map { case (k, v) =>
-      "\"" + k + "\":" + String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    }.mkString("[isolated-json] {", ",", "}"))
+    val res = timePasses(spark, sfDir, picked).times
+    println(res.map { case (k, v) => "\"" + k + "\":" + fmt(v, 3) }
+      .mkString("[isolated-json] {", ",", "}"))
     spark.stop()
   }
 
@@ -113,7 +126,7 @@ object Bench {
     * named queries; returns its timings, or empty on any failure — the
     * bench line must survive a broken fork.
     */
-  private def isolatedRetime(sfDir: String, cpus: String,
+  private def isolatedRetime(sfDir: String, cpus: Int,
       names: Seq[String]): Map[String, Double] = {
     if (names.isEmpty) return Map.empty
     try {
@@ -127,7 +140,7 @@ object Bench {
         "graft.Bench", "--isolated", names.mkString(","))).asJava
       val pb = new ProcessBuilder(cmd)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-      pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
       pb.redirectErrorStream(true)
       val proc = pb.start()
       val out = scala.io.Source.fromInputStream(proc.getInputStream)
@@ -147,29 +160,88 @@ object Bench {
     }
   }
 
+  /** The official line: total seconds over the queries that finished,
+    * the count that failed, and every finished query's time under its
+    * bare number.
+    *
+    * It MUST fit the driver's 2000-byte stdout tail together with sbt's
+    * trailing "[success] Total time: ..." line (~80 bytes) — BENCH_r09's
+    * ~2100-byte line lost its own head (q01–q06 + the total metric). Keys
+    * are the bare query number (the qNN prefix is unique — checked — and
+    * "queries_key" documents the stripped "q"), emitted in numeric order;
+    * the unit auto-degrades ms → cs → ds until the line fits the budget,
+    * so the artifact stays complete as the suite grows instead of
+    * silently truncating.
+    */
+  private[graft] def officialLine(results: Seq[(String, Double)], failed: Int, sfName: String): String = {
+    val totalStr = fmt(results.map(_._2).sum, 2)
+    val num = "q(\\d+)".r
+    def qnum(n: String): Int = num.findFirstMatchIn(n).map(_.group(1).toInt).getOrElse(0)
+    val shortKeys = results.map(_._1.takeWhile(_ != '_'))
+    require(shortKeys.distinct.size == shortKeys.size,
+      s"duplicate qNN short keys would silently drop a timing: " +
+        shortKeys.groupBy(identity).filter(_._2.size > 1).keys.mkString(","))
+    val ordered = results.sortBy(r => (qnum(r._1), r._1))
+    def fullMap(unit: String, div: Double): String = {
+      val compact = ordered.map { case (k, v) =>
+        s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * div)}"""
+      }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","failed":$failed,"queries_unit":"$unit","queries_key":"q#","queries":$compact,"sf":"$sfName"}"""
+    }
+    val budget = 1870 // 2000-byte tail − sbt footer − [info] prefix margin
+    // last-resort degradation: when even deciseconds can't fit the full
+    // map (~400+ queries), emit the total + the slowest queries that DO
+    // fit + an explicit omission marker — a short, parseable line beats
+    // a silently head-truncated complete one (the BENCH_r09 failure
+    // mode); the complete map is always in bench_full.json.
+    def truncatedLine(): String = {
+      val byCost = results.sortBy(-_._2)
+      val kept = scala.collection.mutable.ListBuffer.empty[(String, Double)]
+      var len = 240 // prefix + failed + omission fields, conservatively
+      for ((k, v) <- byCost if len < budget - 14) {
+        val entry = s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * 100)}"""
+        if (len + entry.length + 1 <= budget) { kept += (k -> v); len += entry.length + 1 }
+      }
+      val compact = kept.sortBy(r => (qnum(r._1), r._1)).map { case (k, v) =>
+        s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * 100)}"""
+      }.mkString("{", ",", "}")
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","failed":$failed,"queries_unit":"cs","queries_key":"q#","queries_omitted":${results.size - kept.size},"queries":$compact,"sf":"$sfName","full":"bench_full.json"}"""
+    }
+    Seq("ms" -> 1000.0, "cs" -> 100.0, "ds" -> 10.0)
+      .map { case (u, d) => fullMap(u, d) }
+      .find(_.length <= budget)
+      .getOrElse {
+        println(s"[bench] WARNING: full per-query map exceeds the ${budget}B stdout budget even at ds; emitting slowest-first truncated map (complete artifact in bench_full.json)")
+        truncatedLine()
+      }
+  }
+
+  // Locale.ROOT: the f-interpolator is locale-sensitive — a
+  // comma-decimal JVM locale would emit invalid JSON
+  private def fmt(v: Double, dp: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Measured at sf0.1 on a 32-core box: local[8] beats local[4] (CPU-bound
     // minhash parallelism) and local[32] (tiny-partition scheduling overhead).
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Sessions.cpus
     if (args.length >= 2 && args(0) == "--isolated") {
       isolatedChild(sfDir, cpus, args(1).split(",").toSeq); return
     }
     // optional arg: comma-separated name prefixes — local iteration only
-    // (the driver always times the full set)
+    // (the driver always times the full set). A filtered run warms and
+    // builds only its own queries and leaves bench_full.json alone: the
+    // next full run reads that file as its prior.
+    val filtered = args.nonEmpty
     val only: String => Boolean =
-      if (args.nonEmpty) { val ps = args(0).split(","); n => ps.exists(n.startsWith) }
+      if (filtered) { val ps = args(0).split(","); n => ps.exists(n.startsWith) }
       else _ => true
-    val spark = buildSession(cpus)
+    val picked = SparkEntry.queries.toSeq.filter(q => only(q._1)).sortBy(_._1)
+    val spark = Sessions.local(cpus)
 
-    // warmup: touch every table + exercise shuffle/window/join machinery once
-    Tables.All.foreach { t =>
-      try Tables.load(spark, sfDir, t).limit(1).count() catch { case _: Throwable => }
-    }
+    warmUp(spark, sfDir)
     try {
-      import org.apache.spark.sql.functions._
-      spark.range(1000000).select((col("id") % 97).as("k"), col("id"))
-        .groupBy("k").count().count()
       // JIT the hot UDF/HOF paths (minhash, cosine) on a tiny slice
       val docs = Tables.documents(spark, sfDir).limit(300)
       graft.dedup.MinHashLsh.candidatePairs(docs, "doc_id", "text").count()
@@ -180,12 +252,12 @@ object Bench {
     // FIXTURE WARM: per-sf fixture caches (ANN indexes, PQ codebooks,
     // BPE counts, dHash fixtures, …) build EAGERLY inside query
     // construction (Fixtures.cachedPath writes on miss) — construct
-    // every query once, untimed, so a post-regen cold cache can never
-    // land inside a timed pass (r6 driver bench showed q85 at 2.12×
-    // for exactly this reason). The cost is logged so a driver run
-    // stays interpretable.
+    // every timed query once, untimed, so a post-regen cold cache can
+    // never land inside a timed pass (r6 driver bench showed q85 at
+    // 2.12× for exactly this reason). The cost is logged so a driver
+    // run stays interpretable.
     val tFix = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    picked.foreach { case (_, fn) =>
       try { fn(spark, sfDir); () } catch { case _: Throwable => () }
     }
     println(f"[bench] fixture warm + plan construction: ${(System.nanoTime() - tFix) / 1e9}%.1f s")
@@ -196,25 +268,10 @@ object Bench {
     // Catalyst eliminate joins/aggregations that don't change the count
     // (q18's whole aggregation disappears under count, for one), silently
     // under-reporting any query whose tail is count-eliminable.
-    def timeAll(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.filter(q => only(q._1)).sortBy(_._1).map { case (name, fn) =>
-        name -> timeOne(spark, sfDir, fn)
-      }
     // prior round's artifact — read BEFORE this run overwrites it
     val prior = readPriorFull()
-    val p1 = timeAll().toMap
-    val p2 = timeAll()
-    val results = p2.map { case (n, t) => n -> math.min(t, p1(n)) }
-    // per-query two-pass spread (max/min): the in-run noise floor a
-    // verdict reads a round-over-round mover against
-    val spread = p2.map { case (n, t) =>
-      n -> math.max(t, p1(n)) / math.max(1e-9, math.min(t, p1(n)))
-    }.toMap
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val Timings(results, spread, failed) = timePasses(spark, sfDir, picked)
     val sfName = sfDir.split('/').last
-    // Locale.ROOT: the f-interpolator is locale-sensitive — a
-    // comma-decimal JVM locale would emit invalid JSON
-    val totalStr = String.format(java.util.Locale.ROOT, "%.2f", Double.box(total))
     // COMPLETE artifact → a file (full names, float seconds, total): the
     // stdout tail the driver keeps is 2000 bytes, far too small for the
     // full-precision map, and BENCH_r09 proved even the compact map
@@ -233,67 +290,23 @@ object Bench {
       if (results.size < 20) Map.empty[String, Double] // local partial runs skip the fork
       else isolatedRetime(sfDir, cpus, movers)
     def jmap(m: Map[String, Double], dp: Int): String =
-      m.toSeq.sortBy(_._1).map { case (k, v) =>
-        "\"" + k + "\":" + String.format(java.util.Locale.ROOT, s"%.${dp}f", Double.box(v))
-      }.mkString("{", ",", "}")
+      m.toSeq.sortBy(_._1).map { case (k, v) => "\"" + k + "\":" + fmt(v, dp) }
+        .mkString("{", ",", "}")
     val fullQs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failedQs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val totalStr = fmt(results.map(_._2).sum, 2)
     val fullLine =
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfName","queries":$fullQs,"spread":${jmap(spread, 2)},"isolated":${jmap(isolated, 3)}}"""
-    try {
+      s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfName","queries":$fullQs,"spread":${jmap(spread, 2)},"isolated":${jmap(isolated, 3)},"failed":$failedQs}"""
+    if (filtered) println("[bench] filtered run: bench_full.json left unchanged")
+    else try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
         (fullLine + "\n").getBytes("UTF-8"))
       println("[bench] full artifact written to bench_full.json")
     } catch { case e: Throwable => println(s"[bench] full-artifact write failed: $e") }
     println(s"[bench-full] $fullLine")
-    // Official line LAST, and it MUST fit the driver's 2000-byte stdout
-    // tail together with sbt's trailing "[success] Total time: ..." line
-    // (~80 bytes) — BENCH_r09's ~2100-byte line lost its own head (q01–q06
-    // + the total metric). Keys are the bare query number (the qNN prefix
-    // is unique — checked — and "queries_key" documents the stripped "q"),
-    // emitted in numeric order; the unit auto-degrades ms → cs → ds until
-    // the line fits the budget, so the artifact stays complete as the
-    // suite grows instead of silently truncating.
-    val num = "q(\\d+)".r
-    def qnum(n: String): Int = num.findFirstMatchIn(n).map(_.group(1).toInt).getOrElse(0)
-    val shortKeys = results.map(_._1.takeWhile(_ != '_'))
-    require(shortKeys.distinct.size == shortKeys.size,
-      s"duplicate qNN short keys would silently drop a timing: " +
-        shortKeys.groupBy(identity).filter(_._2.size > 1).keys.mkString(","))
-    val ordered = results.sortBy(r => (qnum(r._1), r._1))
-    def officialLine(unit: String, div: Double): String = {
-      val compact = ordered.map { case (k, v) =>
-        s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * div)}"""
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries_unit":"$unit","queries_key":"q#","queries":$compact,"sf":"$sfName"}"""
-    }
-    val budget = 1870 // 2000-byte tail − sbt footer − [info] prefix margin
-    // last-resort degradation: when even deciseconds can't fit the full
-    // map (~400+ queries), emit the total + the slowest queries that DO
-    // fit + an explicit omission marker — a short, parseable line beats
-    // a silently head-truncated complete one (the BENCH_r09 failure
-    // mode); the complete map is always in bench_full.json.
-    def truncatedLine(): String = {
-      val byCost = results.sortBy(-_._2)
-      val kept = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-      var len = 220 // prefix + omission fields, conservatively
-      for ((k, v) <- byCost if len < budget - 14) {
-        val entry = s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * 100)}"""
-        if (len + entry.length + 1 <= budget) { kept += (k -> v); len += entry.length + 1 }
-      }
-      val compact = kept.sortBy(r => (qnum(r._1), r._1)).map { case (k, v) =>
-        s""""${k.takeWhile(_ != '_').stripPrefix("q")}":${math.round(v * 100)}"""
-      }.mkString("{", ",", "}")
-      s"""{"metric":"total","value":$totalStr,"unit":"sec","queries_unit":"cs","queries_key":"q#","queries_omitted":${results.size - kept.size},"queries":$compact,"sf":"$sfName","full":"bench_full.json"}"""
-    }
-    val line = Seq("ms" -> 1000.0, "cs" -> 100.0, "ds" -> 10.0)
-      .map { case (u, d) => officialLine(u, d) }
-      .find(_.length <= budget)
-      .getOrElse {
-        println(s"[bench] WARNING: full per-query map exceeds the ${budget}B stdout budget even at ds; emitting slowest-first truncated map (complete artifact in bench_full.json)")
-        truncatedLine()
-      }
-    println(line)
+    // official line LAST
+    println(officialLine(results, failed.size, sfName))
     spark.stop()
   }
 }

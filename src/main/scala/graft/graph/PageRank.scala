@@ -89,7 +89,8 @@ object PageRank {
     require(iters >= 0 && iters <= 50, s"iters out of range: $iters")
     require(scale > 0 && dampNum > 0 && dampDen >= dampNum,
       s"bad damping/scale: $dampNum/$dampDen @ $scale")
-    // Iterative-plan discipline (measured at sf0.1, AbGraph):
+    // Iterative-plan discipline (measured at sf0.1 with a stage-timing
+    // A/B, SURVEY §5 "three measured traps"):
     // 1. WITHOUT materialization, iteration i's lazy plan contains
     //    iterations 1..i−1 — O(iters²) recompute.
     // 2. localCheckpoint for the per-iteration frames is a TRAP: a
@@ -507,6 +508,8 @@ object Harmonic {
       else { layers = layers :+ fresh; frontier = fresh }
       depth += 1
     }
+    // every layer is an eager truncate, so nothing left reads `e`
+    e.unpersist(false)
     layers.map(_.filter(col("d") > 0)).reduce(_ unionByName _)
       .groupBy(col("node"))
       .agg(

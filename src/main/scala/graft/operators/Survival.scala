@@ -260,17 +260,6 @@ object Survival {
         keyCols ++ Seq(strataCol, groupCol), durationCol, eventCol),
       keyCols, Seq(strataCol), groupCol)
 
-  /** [[logRankStratified]] from a (possibly folded) [[lifetimeCells]]
-    * frame whose key set is `keyCols ++ strataCols :+ groupCol`.
-    */
-  def logRankStratifiedFromCells(
-      cellsIn: DataFrame,
-      keyCols: Seq[String],
-      strataCol: String,
-      groupCol: String
-  ): DataFrame =
-    logRankPooled(cellsIn, keyCols, Seq(strataCol), groupCol)
-
   /** Shared spine: per-(keys, strata, t) hypergeometric terms, pooled
     * over strata per key set. `strataCols` empty = plain log-rank
     * (n_strata = 1 dropped by the caller).

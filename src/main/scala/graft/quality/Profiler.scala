@@ -565,8 +565,10 @@ object Profiler {
     * Cost shape: two (group, cell) exchanges + the moments exchange vs
     * the windowed arm's ONE exchange — but the largest sort anywhere is
     * a cell population, so this is the 100× hot-group path
-    * ([[graft.AbQuantiles]] measures the crossover; the quantile A/B's
-    * 3.91× at 4.8M rows/group is the same layout). Hot-VALUE groups
+    * (measured bucketed speedup on an 86%-hot-group corpus:
+    * 0.53× at 0.6M, 0.70× at 4.8M, 0.78× at 14.4M rows/group; parity
+    * at ≈5M on one manufactured hot group, SURVEY §5.12 — adopted for
+    * the O(cell) per-reducer memory bound, not wall clock). Hot-VALUE groups
     * still collapse into one cell — [[graft.operators.Sketches]]' bottom-k
     * sample path is the honest answer there.
     */
@@ -747,8 +749,8 @@ object Profiler {
     * column — no per-group reducer sort anywhere), then the same one
     * moments aggregation and pair generator. Cost: one (group, cell)
     * exchange per column instead of the shared single exchange — the
-    * hot-group trade [[graft.AbQuantiles]] prices (`spearman` op)
-    * applied per column.
+    * hot-group trade measured for [[spearmanBucketed]], applied per
+    * column.
     */
   def spearmanMatrixBucketed(
       df: DataFrame,

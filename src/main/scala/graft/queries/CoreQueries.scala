@@ -439,8 +439,8 @@ object CoreQueries {
 
   /** Skew-safe exact quantiles gate — [[Quantiles.exactQuantilesBucketed]]
     * on the q39 shape, proving the bucketed-rank path (no per-group
-    * single-reducer sort; [[graft.AbQuantiles]] measured 3.9× at a 4M-row
-    * hot group) selects BIT-IDENTICAL values: the oracle is the same
+    * single-reducer sort; measured 3.9× faster than the windowed arm at
+    * a 4.8M-row hot group) selects BIT-IDENTICAL values: the oracle is the same
     * plain rank-selection replay q39 uses — rank selection has one right
     * answer regardless of which layout computed it.
     */
@@ -4124,10 +4124,6 @@ object CoreQueries {
         col("y") >= when(col("arm") === "A", 2L).otherwise(3L))
       .withColumn("m_active", col("n_ev") >= 5L)
 
-  /** Spec access to the q346 scorecard fixture (fixture-adequacy pins). */
-  def scorecardPerUserForSpec(s: SparkSession, dir: String): DataFrame =
-    scorecardPerUser(s, dir)
-
   private val scorecardMetrics =
     Seq("m_active", "m_conv", "m_conv_shift", "m_even", "m_odd_shift")
 
@@ -4532,10 +4528,6 @@ object CoreQueries {
         least(floor(col("__k") / lit(5d)), lit(6d)).cast("long").as("z"))
   }
 
-  /** Spec access to the q361 Cox fixture (fixture-adequacy pins). */
-  def coxSubjectsForSpec(s: SparkSession, dir: String): DataFrame =
-    coxSubjects(s, dir)
-
   private def coxSelect(d: DataFrame): DataFrame =
     d.select(col("n"), col("n_events"), col("cov_min"),
       col("u0_9"), col("i0_9"),
@@ -4881,10 +4873,6 @@ object CoreQueries {
         .as("c2"))
   }
 
-  /** Spec access to the q374 increment state (fixture-adequacy pins). */
-  def rateIncrementsForSpec(s: SparkSession, dir: String): DataFrame =
-    rateIncrements(s, dir)
-
   /** Sequential rate-monitor gate: the Poisson count-per-exposure
     * mSPRT — incidents per event between the parity arms, always-valid
     * under continuous peeking. The oracle replays cumulative exposures/
@@ -4961,10 +4949,6 @@ object CoreQueries {
       .unionByName(
         pu.filter(col("arm").isin("A", "D")).withColumn("cmp", lit("AD")))
   }
-
-  /** Spec access to the q378 fixture (fixture-adequacy pins). */
-  def ratioCupedPerUserForSpec(s: SparkSession, dir: String): DataFrame =
-    ratioCupedPerUser(s, dir)
 
   private def ratioCupedSelect(d: DataFrame): DataFrame =
     d.select(col("cmp"), col("grp_lo"), col("grp_hi"), col("n_groups"),

@@ -21,8 +21,6 @@ object Knn {
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Compiled cosine UDF — kept as the reference implementation and for
     * sessions without codegen; same left-to-right summation order as the
     * native expression below (bit-identical results).

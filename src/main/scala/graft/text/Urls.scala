@@ -85,17 +85,6 @@ object Urls {
     org.apache.spark.sql.graftbridge.column(
       graft.functions.RegisteredDomain(org.apache.spark.sql.graftbridge.expression(h)))
 
-  /** The 2-letter-ccTLD heuristic core of the PSL as a pure regex —
-    * engine-replayable (the q108 oracle's form); agrees with
-    * [[registeredDomain]] on common `.com` / `co.uk`-style hosts but
-    * not on private-section suffixes (`github.io`) or wildcard rules.
-    */
-  def registeredDomainHeuristic(h: Column): Column = {
-    val d = regexp_extract(h,
-      "([^.]+\\.(?:co|com|net|org|gov|ac|edu)\\.[a-z][a-z]|[^.]+\\.[^.]+)$", 1)
-    when(d === "", h).otherwise(d)
-  }
-
   /** The canonical URL (see object doc for the normal form). NULL when
     * the value is not a scheme://-style URL at all — otherwise every
     * malformed input ('example.com/a', 'not a url') would collapse to a

@@ -119,6 +119,22 @@ class GraphSpec extends SparkSpec {
     assert(s1 == s2 && s1.size == 3)
   }
 
+  test("harmonic releases its cached edge frame: two runs leave no cached RDD behind") {
+    import graft.graph.Harmonic
+    // the truncated BFS layers stay: the result reads them, and the
+    // context cleaner frees them once it is unreferenced
+    def cached() = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(_.isCheckpointed).map(_.id).toSet
+    val edges = Tables.lineitem(spark, sf)
+      .select(col("l_partkey").cast("long").as("src"), col("l_suppkey").cast("long").as("dst"))
+    val before = cached()
+    (1 to 2).foreach { _ =>
+      val got = Harmonic.sampledHarmonic(edges, Harmonic.sampleSources(edges, 4), maxDepth = 3)
+      assert(got.collect().nonEmpty)
+    }
+    assert((cached() -- before).isEmpty)
+  }
+
   test("transition matrix: counts follow (ts, id) order; rows sum to 1") {
     import graft.operators.Funnel
     val d = Seq(

@@ -8,8 +8,8 @@ import org.apache.spark.sql.DataFrame
   * here (a filter that stops pushing, a window that loses its group
   * limit, a broadcast that demotes to sort-merge, a narrow scrub that
   * grows a shuffle) silently survives the value-correctness gate, so it
-  * gets its own spec. Regenerate the human-readable audit record with
-  * `runMain graft.PlanAudit <sfDir> <outDir>`.
+  * gets its own spec. Print the AQE-final plans to read them with
+  * `runMain graft.Probe <names> <sfDir> 1 --plan`.
   *
   * Counting rules: `Exchange hash/range/Single` are SHUFFLES
   * (BroadcastExchange intentionally not counted — broadcast is the
@@ -172,7 +172,7 @@ class PlanShapeSpec extends SparkSpec {
     Shape("q150_skew_profile", maxHash = 2, maxRange = 2, requireTopK = true,
       forbidUdf = true),
     // MAD outliers: ONE group-key exchange shared by every window (med
-    // attaches as a window aggregate, not a rejoin — the r8 fix, AbMad
+    // attaches as a window aggregate, not a rejoin — the r8 fix, measured
     // 1.5–1.9× across reruns) and the final aggregation; no join at all
     Shape("q152_mad_outliers", maxHash = 1, forbidSortMergeJoin = true,
       forbidUdf = true),
